@@ -172,7 +172,18 @@ def ngram_jaccard_pairs(
     right answer on both corpus shapes without the caller knowing the
     skew. Callers that KNOW their corpus (benchmarks, fixtures) may pin
     ``False``/``True`` to skip the probe.
+
+    ``checkpoint_dir`` makes the prefix path's pin of the hashed
+    shingle sets a reliable ``.checkpoint()`` (``util.iteration_pin``).
+    Only the prefix path pins: with ``prefix_filter="auto"`` it applies
+    only when the prefix path is taken, and with ``prefix_filter=False``
+    it raises ``ValueError`` rather than being silently ignored.
     """
+    if checkpoint_dir is not None and not prefix_filter:
+        raise ValueError(
+            "ngram_jaccard_pairs: checkpoint_dir is ignored with "
+            "prefix_filter=False (only the prefix path pins)"
+        )
     # ``shingle_sets``: a precomputed ``_shingle_array(df, ...)`` relation
     # (id, shingles: array<string>) — pass it when several miners run over
     # the same corpus (the curation capstone shares ONE tokenize+shingle
@@ -777,7 +788,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    size_to_graph: bool = False,
     hops_per_probe: int | str = "auto",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -821,6 +831,13 @@ def connected_components(
     probe is a driver round-trip + a full label-relation
     materialization, so the same trade holds with bigger constants.
 
+    Loop shuffles stay at the session's ``shuffle.partitions`` with AQE
+    coalescing. Hash-repartitioning every loop relation to a target
+    derived from the edge count measured 1.43x SLOWER (3.1 vs 2.2 s,
+    same-session interleaved min-of-3 at sf0.1; the knob and its A/B
+    script are in commit cc93b37): the pinned repartitions defeat AQE's
+    runtime coalesce and add an exchange per round.
+
     Input: undirected edge list. Output: (doc_id, component_id) for
     every node appearing in a pair; component_id = min doc_id of the
     component — the canonical "keep this one" representative.
@@ -844,35 +861,6 @@ def connected_components(
         # unmaterialized lineage would re-run the upstream pair-mining
         # (the expensive SSJoin/LSH) each round
     )
-    spark = pairs.sparkSession
-    # size_to_graph=True hash-repartitions every loop relation to a
-    # target derived from the edge count (per-plan, no session conf
-    # leak). Measured same-session A/B at sf0.1 (tools/ab_round3.py):
-    # the explicit sizing is 1.43x SLOWER than leaving the loop at
-    # session partitions with AQE coalescing — the pinned repartitions
-    # defeat AQE's runtime coalesce and add an exchange per round — so
-    # the default is False. Use True only on sessions with AQE disabled
-    # or where the graph is orders of magnitude smaller than the
-    # session's shuffle sizing assumes.
-    if size_to_graph:
-        n_edges = edges.count()
-        target = max(spark.sparkContext.defaultParallelism, n_edges // 500_000 + 1)
-        try:
-            sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except ValueError:
-            sess_parts = target  # non-numeric (e.g. "auto") — keep our sizing
-        if target >= sess_parts:
-            target = sess_parts  # never scale ABOVE the session's choice
-
-        def rp(d: DataFrame, col: str) -> DataFrame:
-            return d.repartition(target, col)
-    else:
-        # size_to_graph=False: leave every loop shuffle at the session's
-        # shuffle.partitions (A/B baseline; also the right call when the
-        # caller already sized the session to the graph)
-        def rp(d: DataFrame, col: str) -> DataFrame:
-            return d
-    edges = rp(edges, "dst")
     if hops_per_probe != "auto" and hops_per_probe < 1:
         raise ValueError(f"hops_per_probe must be >= 1 or 'auto', got {hops_per_probe}")
 
@@ -889,8 +877,7 @@ def connected_components(
 
     def _hop(work: DataFrame) -> DataFrame:
         neighbor_min = (
-            edges.join(rp(work, "node"), edges.dst == work.node)
-            .transform(lambda d: rp(d, "src"))
+            edges.join(work, edges.dst == work.node)
             .groupBy("src")
             .agg(F.min("component_id").alias("nbr_min"))
         )
@@ -899,8 +886,7 @@ def connected_components(
             F.coalesce(F.col("nbr_min"), F.col("component_id")),
         )
         return (
-            rp(work, "node")
-            .join(neighbor_min, work.node == neighbor_min.src, "left")
+            work.join(neighbor_min, work.node == neighbor_min.src, "left")
             .select(
                 "node",
                 new_min.alias("component_id"),
@@ -952,7 +938,7 @@ def connected_components(
             for _ in range(hops - 1):
                 work = _hop(work)
         else:
-            work = rp(labels, "node").withColumn("_lastch", F.lit(True))
+            work = labels.withColumn("_lastch", F.lit(True))
             for _ in range(hops):
                 work = _hop(work)
         work = pin(work)
@@ -1008,6 +994,16 @@ def _positional_kgrams(
     )
 
 
+def _check_pinned_cap(op: str, max_gram_freq, checkpoint_dir) -> None:
+    # the span miners pin only the frequency-capped gram relation, so an
+    # uncapped call has nothing for checkpoint_dir to apply to
+    if checkpoint_dir is not None and max_gram_freq is None:
+        raise ValueError(
+            f"{op}: checkpoint_dir is ignored with max_gram_freq=None "
+            "(only the capped path pins)"
+        )
+
+
 def exact_substring_spans(
     df: DataFrame,
     id_col: str,
@@ -1051,7 +1047,12 @@ def exact_substring_spans(
     islands window and the run aggregate share the SAME
     (doc_a, doc_b, diag) partitioning, so detection after the join is
     one exchange. Window partitions are per-(pair, diagonal) — small by
-    construction, no skew pileup."""
+    construction, no skew pileup.
+
+    ``checkpoint_dir`` makes the pin of the capped gram relation a
+    reliable ``.checkpoint()``; only the capped path pins, so it raises
+    ``ValueError`` with ``max_gram_freq=None``."""
+    _check_pinned_cap("exact_substring_spans", max_gram_freq, checkpoint_dir)
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     if min_span_tokens < k:
@@ -1360,7 +1361,10 @@ def exact_substring_spans_incremental(
     it boilerplate today).
 
     Both inputs are (id, pos, _h) state relations from
-    ``positional_gram_state``; ids must be disjoint."""
+    ``positional_gram_state``; ids must be disjoint. ``checkpoint_dir``
+    is as in ``exact_substring_spans`` (raises with
+    ``max_gram_freq=None``)."""
+    _check_pinned_cap("exact_substring_spans_incremental", max_gram_freq, checkpoint_dir)
     allg = history_grams.select(
         F.col(history_grams.columns[0]).alias("_oid"),
         F.col("pos").alias("_opos"),

@@ -37,6 +37,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from etl_fuel_priceguide_ec2_spark.operators.util import fan_out, vec_lit
 
@@ -847,11 +848,11 @@ def _checked_slice(df: DataFrame, slice_col: str) -> DataFrame:
     silently skew if one side kept rows the other lost. A NULL slice
     id has no meaning in the slice-state model (which ingest slice is
     it?), so the invariant is: slice keys are non-null integers."""
-    dt = df.schema[slice_col].dataType.simpleString()
-    if dt not in ("tinyint", "smallint", "int", "bigint", "long"):
+    dt = df.schema[slice_col].dataType
+    if not isinstance(dt, IntegralType):
         raise ValueError(
             f"slice_col {slice_col!r} must be an integral type (state "
-            f"schema carries it as long), got {dt}"
+            f"schema carries it as long), got {dt.simpleString()}"
         )
     return df.filter(F.col(slice_col).isNotNull())
 
@@ -901,7 +902,10 @@ def embedding_second_moment_state(
     (int64 fast lane within <=256-row blocks, Python ints beyond), so
     partial grouping/order cannot change any sum (r16 optimization —
     the sliced-ingest covariance query paid one full MapInPandas pass
-    PER SLICE for the same total Arrow work)."""
+    PER SLICE for the same total Arrow work). The slice column must be
+    integral (else ``ValueError``), and rows with a NULL slice are
+    DROPPED: a NULL slice id names no ingest slice, and dropping it in
+    both moment-state operators keeps the two states mergeable."""
     df = fan_out(df)
     if slice_col is not None:
         df = _checked_slice(df, slice_col)
@@ -1028,7 +1032,9 @@ def embedding_first_moment_state(
     slice. ``slice_col``: carry the slice key through the explode and
     group by (slice, dim) — every slice's state in ONE corpus pass,
     row-identical to per-slice calls unioned (decimal SUM per group is
-    exact, so the grouping key split cannot change any sum)."""
+    exact, so the grouping key split cannot change any sum). As in
+    ``embedding_second_moment_state``, the slice column must be integral
+    (else ``ValueError``) and NULL-slice rows are DROPPED."""
     df = fan_out(df)
     if slice_col is not None:
         df = _checked_slice(df, slice_col)

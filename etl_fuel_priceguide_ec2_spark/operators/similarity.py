@@ -1,11 +1,27 @@
 """X3 — similarity SEARCH over an embedding column: the ladder's read
 side (the fit/encode state it probes lives in ``similarity_index``).
 
-Brute-force cosine top-k as the exact baseline (query set broadcast,
-corpus scanned once, per-partition dot products JVM-side via
-zip_with/aggregate, top-k via the W1 window pattern), plus an
-IVF-style bucketed variant as the 100 TB scale path (search only the
-coarse-quantizer cell(s) of each query instead of the full corpus).
+The rungs, from exact to most compressed:
+
+- ``cosine_topk`` / ``exact_sq_topk``: brute force (query set
+  broadcast, corpus scanned once) — the exact ground truths;
+- ``cosine_topk_ivf``: each query probes its own precomputed cell;
+- ``cosine_topk_rplsh``: random-hyperplane LSH buckets, multi-probe;
+- ``cosine_topk_int8``: brute force over int8 (SQ8) codes;
+- ``cosine_topk_ivf_sq8`` (+ ``_rerank``): the ``nprobe`` nearest
+  k-means cells over SQ8 codes, optionally reranked at full precision;
+- ``cosine_topk_ivf2_sq8``: two-level (coarse x residual) cells;
+- ``topk_ivf_pq``: product-quantized codes scored by ADC table lookups,
+  raw or residual, with an optional exact rerank;
+- ``cosine_topk_zorder``: candidates from the Z-order prefix of the
+  storage layout.
+
+Every rung is one shape — probe → score → top-k — assembled from the
+private helpers below: the broadcast probe join with its self-pair
+filter, the float-cosine and SQ8 integer scores, and ONE ``row_number``
+cut per query ordered by score then ``neighbor_id``, so a tiebreak or
+rounding change cannot drift between rungs. ``ann_recall_report``
+measures any rung against the exact ground truth.
 
 No Python rows are ever materialized: the dot product is a Catalyst
 higher-order function (whole-stage codegen), the ranking a window. For
@@ -22,10 +38,14 @@ from pyspark.sql.functions import pandas_udf
 
 from etl_fuel_priceguide_ec2_spark.operators.clustering import sq_dists_expr
 from etl_fuel_priceguide_ec2_spark.operators.similarity_index import (  # noqa: F401
-    # re-exported: the fit/encode side moved to similarity_index
-    # (VERDICT r14 item 7) — callers keep importing via this module
+    # the fit/encode side lives in similarity_index (VERDICT r14 item
+    # 7); its public names are re-exported so callers keep importing
+    # via this module
+    _SQ8_SCALE,
+    _nearest,
     _pair_sq_dist,
     _residual_sql,
+    _sq8_code,
     _with_norm,
     pq_encode,
     pq_reconstruction_report,
@@ -38,16 +58,112 @@ from etl_fuel_priceguide_ec2_spark.operators.util import (
 )
 
 
+def _float_sides(corpus, queries, id_col, vec_col, *more, extra=None, prep=None):
+    """Both sides of a float-cosine search: (neighbor_id, cv, cn) over
+    the corpus and (query_id, qv, qn) over the queries, each followed
+    by ``more``. ``extra`` columns ride through ``_with_norm``; ``prep``
+    runs on the normed frame before the projection."""
+
+    def side(df, rid, p):
+        normed = _with_norm(df, id_col, vec_col, extra)
+        if prep is not None:
+            normed = prep(normed)
+        return normed.select(
+            F.col(id_col).alias(rid), F.col("v").alias(f"{p}v"), F.col("norm").alias(f"{p}n"), *more
+        )
+
+    return side(corpus, "neighbor_id", "c"), side(queries, "query_id", "q")
+
+
+def _probe_join(c: DataFrame, q: DataFrame, key: str | None = None) -> DataFrame:
+    """Broadcast the bounded query side onto the corpus scan: an
+    equi-join on the probe ``key`` followed by the self-pair filter, or
+    (no key, brute force) a nested-loop join on the self-pair
+    condition itself."""
+    not_self = F.col("query_id") != F.col("neighbor_id")
+    if key is None:
+        return c.join(F.broadcast(q), not_self)
+    return c.join(F.broadcast(q), key).filter(not_self)
+
+
+def _cosine():
+    """Float cosine of the projected (cv, cn) x (qv, qn) pair."""
+    return F.aggregate(
+        F.zip_with("cv", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
+    ) / (F.col("cn") * F.col("qn"))
+
+
+def _cosine4():
+    """``cosine`` rounded to 4dp; ``+ 0.0`` turns a rounded -0.0 into
+    0.0 (engines disagree on the sign of a rounded tiny negative, and
+    the oracles add 0.0 the same way)."""
+    return F.round("cosine", 4) + F.lit(0.0)
+
+
+def _topk(scored: DataFrame, score: str, k: int, out=None, ascending: bool = False) -> DataFrame:
+    """THE rank cut of every rung: ``row_number`` per ``query_id``
+    ordered by ``score`` (descending unless ``ascending``) then
+    ``neighbor_id``, kept while <= k. Returns (query_id, neighbor_id,
+    rank, ``out``); with ``out`` None, the bare (query_id, neighbor_id)
+    candidate set a rerank consumes."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    rank, cols = ("rank", ["rank", out]) if out is not None else ("_crank", [])
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select("query_id", "neighbor_id", *cols)
+    )
+
+
+def _sq8_topk(c: DataFrame, q: DataFrame, k: int, key: str | None = None) -> DataFrame:
+    """Probe, score and cut over SQ8 codes (``cq`` x ``qq``): the exact
+    integer dot product over _SQ8_SCALE² as ``approx_cosine``."""
+    scored = (
+        _probe_join(c, q, key)
+        .withColumn(
+            "dot_i",
+            F.aggregate(
+                F.zip_with("cq", "qq", lambda x, y: x * y),
+                F.lit(0).cast("long"),
+                lambda a, x: a + x,
+            ),
+        )
+        .withColumn(
+            "approx_cosine", F.round(F.col("dot_i") / F.lit(float(_SQ8_SCALE * _SQ8_SCALE)), 6)
+        )
+    )
+    return _topk(scored, "approx_cosine", k, "approx_cosine")
+
+
+def _empty_topk(corpus: DataFrame, id_col: str, score_col: str) -> DataFrame:
+    """Empty corpus (no codebook): an empty result with the rung's
+    stable (query_id, neighbor_id, rank, score) schema."""
+    return corpus.select(
+        F.col(id_col).alias("query_id"),
+        F.col(id_col).alias("neighbor_id"),
+        F.lit(None).cast("int").alias("rank"),
+        F.lit(None).cast("double").alias(score_col),
+    ).filter(F.lit(False))
+
+
+def _probed_cells(centroids, nprobe: int):
+    """Explode each ``v`` row into its ``nprobe`` ranked probe cells."""
+    qd = sq_dists_expr("v", centroids)
+    return F.explode(ranked_probe_cells(qd, len(centroids), nprobe)).alias("cell")
+
+
 def ranked_probe_cells(dists, cells: int, nprobe: int):
     """The ONE definition of IVF probe-cell ranking (ADVICE r15): given
     a per-row array of ``cells`` squared distances, return the
     ``nprobe`` nearest cell ids as ``array<long>``, ranked ascending
     with ties to the LOWER cell id. Every consumer of the probe set —
-    ``topk_ivf_pq``'s query side, ``cosine_topk_ivf_sq8``,
-    ``cosine_topk_ivf2_sq8``'s per-level probes, and the serving-layer
-    ``probe_cells`` relation that ``prune_codes_to_probed_cells`` /
-    ``ann_query_stream(prune_cells=True)`` act on — MUST fold this
-    expression, never a re-derivation: if ranking ever diverged (fold
+    ``topk_ivf_pq``'s query side, ``cosine_topk_ivf_sq8``, and the
+    serving-layer ``probe_cells`` relation that
+    ``prune_codes_to_probed_cells`` / ``ann_query_stream(prune_cells=True)``
+    act on — folds it through ``_probed_cells``, never a re-derivation
+    (``cosine_topk_ivf2_sq8`` ranks composite cells by d1 + d2, a
+    different measure): if ranking ever diverged (fold
     order, tiebreak, cast), pruning would silently drop cells the
     search actually probes and return wrong results instead of
     erroring."""
@@ -76,26 +192,9 @@ def cosine_topk(
     products, fully distributed, no shuffle of the corpus (ranking
     shuffles only (query_id, neighbor_id, score) triples).
     """
-    c = _with_norm(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn")
-    )
-    q = _with_norm(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.aggregate(F.zip_with("cv", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-            / (F.col("cn") * F.col("qn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", (F.round("cosine", 4) + F.lit(0.0)).alias("cosine"))
-    )
+    c, q = _float_sides(corpus, queries, id_col, vec_col)
+    scored = _probe_join(c, q).withColumn("cosine", _cosine())
+    return _topk(scored, "cosine", k, _cosine4().alias("cosine"))
 
 
 def cosine_topk_ivf(
@@ -110,34 +209,14 @@ def cosine_topk_ivf(
     (``cell_col``); each query probes only its own cell. At 100 TB the
     cells are the partition key, so a probe touches one partition's
     files instead of the corpus. Recall < 1.0 by construction (single
-    probe); increase probes by unioning neighbor cells."""
-    c = _with_norm(corpus, id_col, vec_col, [cell_col]).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cn"),
-        F.col(cell_col).alias("cell"),
+    probe). To widen the probe, assign cells from a codebook and take
+    ``nprobe`` nearest cells instead (``cosine_topk_ivf_sq8``,
+    ``topk_ivf_pq``)."""
+    c, q = _float_sides(
+        corpus, queries, id_col, vec_col, F.col(cell_col).alias("cell"), extra=[cell_col]
     )
-    q = _with_norm(queries, id_col, vec_col, [cell_col]).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        F.col(cell_col).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.aggregate(F.zip_with("cv", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-            / (F.col("cn") * F.col("qn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", (F.round("cosine", 4) + F.lit(0.0)).alias("cosine"))
-    )
+    scored = _probe_join(c, q, "cell").withColumn("cosine", _cosine())
+    return _topk(scored, "cosine", k, _cosine4().alias("cosine"))
 
 
 def cosine_scores_pandas(
@@ -242,12 +321,7 @@ def cosine_topk_rplsh(
     # the 6-plane signature fold is shallow, and an A/B measured the
     # barrier a wash (2.11 vs 2.05 s at sf0.1) — re-expansion only
     # matters when the inlined tree is deep
-    c = _sig(_with_norm(corpus, id_col, vec_col)).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn"), "sig"
-    )
-    q = _sig(_with_norm(queries, id_col, vec_col)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn"), "sig"
-    )
+    c, q = _float_sides(corpus, queries, id_col, vec_col, "sig", prep=_sig)
     # multiprobe: expand each query to every signature within hamming<=r
     probe_sigs = [0]
     if multiprobe_hamming >= 1:
@@ -259,23 +333,16 @@ def cosine_topk_rplsh(
     q = q.withColumn(
         "sig", F.explode(F.array(*[F.col("sig").bitwiseXOR(F.lit(m)) for m in probe_sigs]))
     )
+    # no broadcast hint (unlike _probe_join): the multiprobe side is
+    # |queries| x |probe_sigs| rows
     scored = (
         c.join(q, "sig")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.aggregate(F.zip_with("cv", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-            / (F.col("cn") * F.col("qn")),
-        )
+        .withColumn("cosine", _cosine())
         .select("query_id", "neighbor_id", "cosine")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", (F.round("cosine", 4) + F.lit(0.0)).alias("cosine"))
-    )
+    return _topk(scored, "cosine", k, _cosine4().alias("cosine"))
 
 
 def cosine_topk_int8(
@@ -286,8 +353,8 @@ def cosine_topk_int8(
     k: int = 10,
 ) -> DataFrame:
     """Scalar-quantized ANN: unit-normalize, quantize each component to
-    int8 (round(x/‖x‖ · 127)), score candidates with the integer dot
-    product. Output: (query_id, neighbor_id, rank, approx_cosine).
+    int8 (the SQ8 code, ``quantize_int8``), score candidates with the
+    integer dot product. Output: (query_id, neighbor_id, rank, approx_cosine).
 
     The 100 TB storage/bandwidth lever: int8 vectors are 4× smaller
     than float32 (8× vs float64), so corpus scan I/O and the candidate
@@ -306,26 +373,7 @@ def cosine_topk_int8(
     q = quantize_int8(queries, id_col, vec_col).select(
         F.col(id_col).alias("query_id"), F.col("q8").alias("qq")
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "dot_i",
-            F.aggregate(
-                F.zip_with("cq", "qq", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ),
-        )
-        .withColumn("approx_cosine", F.round(F.col("dot_i") / F.lit(127.0 * 127.0), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "approx_cosine")
-    )
+    return _sq8_topk(c, q, k)
 
 
 def cosine_topk_ivf_sq8(
@@ -365,15 +413,8 @@ def cosine_topk_ivf_sq8(
         centroids = clustering.fit_centroids(
             corpus, id_col, vec_col, k=cells, iters=iters
         )
-    if not centroids:  # empty corpus: empty result, stable schema
-        return corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(None).cast("int").alias("rank"),
-            F.lit(None).cast("double").alias("approx_cosine"),
-        ).filter(F.lit(False))
-    cells = len(centroids)
-    _dists = sq_dists_expr  # string fast path: "v" + raw matrix
+    if not centroids:
+        return _empty_topk(corpus, id_col, "approx_cosine")
 
     # corpus: primary cell (argmin, ties to lower index) + int8 code.
     # plan_barrier stops CollapseProject and the join-side predicate/
@@ -381,46 +422,18 @@ def cosine_topk_ivf_sq8(
     # every reference (see cosine_topk_ivf2_sq8, where the deeper tree
     # made this a measured 7x; here the single-level tree still
     # re-evaluates ~3x without it)
-    cb = _with_norm(corpus, id_col, vec_col)
-    cd = _dists("v", centroids)
-    c = plan_barrier(cb.select(
+    c = plan_barrier(_with_norm(corpus, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
-        (F.array_position(cd, F.array_min(cd)) - 1).cast("long").alias("cell"),
-        F.transform("v", lambda x: F.round(x / F.col("norm") * 127).cast("long")).alias(
-            "cq"
-        ),
+        _nearest(sq_dists_expr("v", centroids)).alias("cell"),
+        _sq8_code().alias("cq"),
     ))
     # queries: nprobe nearest cells + int8 code
-    qb = _with_norm(queries, id_col, vec_col)
-    qd = _dists("v", centroids)
-    q = qb.select(
+    q = _with_norm(queries, id_col, vec_col).select(
         F.col(id_col).alias("query_id"),
-        F.explode(ranked_probe_cells(qd, cells, nprobe)).alias("cell"),
-        F.transform("v", lambda x: F.round(x / F.col("norm") * 127).cast("long")).alias(
-            "qq"
-        ),
+        _probed_cells(centroids, nprobe),
+        _sq8_code().alias("qq"),
     )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "dot_i",
-            F.aggregate(
-                F.zip_with("cq", "qq", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ),
-        )
-        .withColumn("approx_cosine", F.round(F.col("dot_i") / F.lit(127.0 * 127.0), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "approx_cosine")
-    )
+    return _sq8_topk(c, q, k, "cell")
 
 
 def cosine_topk_ivf_sq8_rerank(
@@ -458,27 +471,13 @@ def cosine_topk_ivf_sq8_rerank(
         nprobe=nprobe,
         centroids=centroids,
     ).select("query_id", "neighbor_id")
-    c = _with_norm(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn")
-    )
-    q = _with_norm(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
+    c, q = _float_sides(corpus, queries, id_col, vec_col)
     rescored = (
         cand.join(c, "neighbor_id")
         .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cosine",
-            F.aggregate(F.zip_with("cv", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-            / (F.col("cn") * F.col("qn")),
-        )
+        .withColumn("cosine", _cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", (F.round("cosine", 4) + F.lit(0.0)).alias("cosine"))
-    )
+    return _topk(rescored, "cosine", k, _cosine4().alias("cosine"))
 
 
 def cosine_topk_ivf2_sq8(
@@ -533,34 +532,20 @@ def cosine_topk_ivf2_sq8(
             fit_fraction=fit_fraction,
         )
     c1, c2 = codebooks
-    if not c1 or not c2:  # empty corpus: empty result, stable schema
-        return corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(None).cast("int").alias("rank"),
-            F.lit(None).cast("double").alias("approx_cosine"),
-        ).filter(F.lit(False))
+    if not c1 or not c2:
+        return _empty_topk(corpus, id_col, "approx_cosine")
     k1, k2 = len(c1), len(c2)
     cent1 = mat_lit(c1)
     _dists = sq_dists_expr  # string fast path: column text + raw matrix
-
-    def _primary(d):
-        # ties to the lower cell index (first array_position match)
-        return (F.array_position(d, F.array_min(d)) - 1).cast("long")
-
-    def _probes(d, kk):
-        return ranked_probe_cells(d, kk, nprobe)
 
     def _resid(vec_expr, b1):
         return F.zip_with(
             vec_expr, F.element_at(cent1, (b1 + 1).cast("int")), lambda x, c: x - c
         )
 
-    q8code = F.transform("v", lambda x: F.round(x / F.col("norm") * 127).cast("long"))
-
     # corpus: ONE composite cell (primary coarse, primary residual) + int8
     cb = _with_norm(corpus, id_col, vec_col)
-    b1 = _primary(_dists("v", c1))
+    b1 = _nearest(_dists("v", c1))
     cb = cb.withColumn("_b1", b1).withColumn("_r", _resid(F.col("v"), F.col("_b1")))
     # plan_barrier: without it, CollapseProject + join-side predicate/
     # hash generation re-expand the nested d1 -> residual -> d2
@@ -568,14 +553,14 @@ def cosine_topk_ivf2_sq8(
     # row; measured join 2.11 -> 0.30 s at sf0.1, identical output).
     c = plan_barrier(cb.select(
         F.col(id_col).alias("neighbor_id"),
-        (F.col("_b1") * k2 + _primary(_dists("_r", c2))).alias("cell"),
-        q8code.alias("cq"),
+        (F.col("_b1") * k2 + _nearest(_dists("_r", c2))).alias("cell"),
+        _sq8_code().alias("cq"),
     ))
     # queries: top-nprobe composite cells by combined d1 + d2 (ties to
     # the lower (coarse, residual) index pair, matching the oracle's
     # ORDER BY dsum, b1, b2)
     qb = _with_norm(queries, id_col, vec_col)
-    qb1 = _primary(_dists("v", c1))
+    qb1 = _nearest(_dists("v", c1))
     qb = (
         qb.withColumn("_b1", qb1)
         .withColumn("_r", _resid(F.col("v"), F.col("_b1")))
@@ -604,29 +589,9 @@ def cosine_topk_ivf2_sq8(
     q = qb.select(
         F.col(id_col).alias("query_id"),
         F.explode(top_cells).alias("cell"),
-        q8code.alias("qq"),
+        _sq8_code().alias("qq"),
     )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "dot_i",
-            F.aggregate(
-                F.zip_with("cq", "qq", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ),
-        )
-        .withColumn("approx_cosine", F.round(F.col("dot_i") / F.lit(127.0 * 127.0), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "approx_cosine")
-    )
+    return _sq8_topk(c, q, k, "cell")
 
 
 def topk_ivf_pq(
@@ -676,11 +641,10 @@ def topk_ivf_pq(
     (query_id, neighbor_id, rank, sq_dist) reranked, or
     (query_id, neighbor_id, rank, approx_sq_dist) pure-ADC.
 
-    Classical refinement not taken (documented): FAISS's IVF,PQ
-    encodes RESIDUALS (v - coarse centroid) for tighter codebooks;
-    this rung quantizes raw vectors so the PQ codebooks are
-    independent of the coarse layer and replayable with the same
-    Lloyd's SQL fragment per subspace.
+    Raw codes by default: the PQ codebooks are then independent of the
+    coarse layer and replayable with the same Lloyd's SQL fragment per
+    subspace. FAISS's IVF,PQ encodes RESIDUALS (v - coarse centroid)
+    for tighter codebooks — that form is ``residual=True`` below.
 
     100 TB shape: fits touch the corpus iters times (bounded driver
     state: cells*dim + m*ks*(dim/m) doubles); the probe reads
@@ -707,14 +671,9 @@ def topk_ivf_pq(
         centroids = clustering.fit_centroids(
             corpus, id_col, vec_col, k=cells, iters=iters
         )
-    score_col = "sq_dist" if rerank_m is not None else "approx_sq_dist"
-    if not centroids:  # empty corpus: empty result, stable schema
-        return corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(None).cast("int").alias("rank"),
-            F.lit(None).cast("double").alias(score_col),
-        ).filter(F.lit(False))
+    if not centroids:
+        score_col = "sq_dist" if rerank_m is not None else "approx_sq_dist"
+        return _empty_topk(corpus, id_col, score_col)
     dim = len(centroids[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
@@ -735,8 +694,6 @@ def topk_ivf_pq(
             )
             for s in range(m)
         ]
-    cells = len(centroids)
-    _dists = sq_dists_expr
 
     # corpus: primary coarse cell + m sub-codes — the persisted-state
     # relation (pq_encode). Pass ``codes=`` (read back off parquet) to
@@ -754,14 +711,33 @@ def topk_ivf_pq(
     # queries: nprobe nearest cells + one ADC table per subspace (per
     # probed CELL when residual — the table subtracts that cell's
     # centroid from the query so it lives in the candidates' frame)
+    def _adc_tables(src):
+        # src: a projected column name (string fast path) or a Column
+        return [
+            sq_dists_expr(
+                f"slice({src}, {s * sub + 1}, {sub})"
+                if isinstance(src, str)
+                else F.slice(src, s * sub + 1, sub),
+                pq_codebooks[s],
+            ).alias(f"adc{s}")
+            for s in range(m)
+        ]
+
     qb = _with_norm(queries, id_col, vec_col)
-    qd = _dists("v", centroids)
-    probe_cells = F.explode(ranked_probe_cells(qd, cells, nprobe)).alias("cell")
-    if residual:
+    if not residual:
+        # raw vectors: the tables are cell-independent, so compute all
+        # m HOF folds ONCE per query alongside the explode instead of
+        # once per (query, probed cell) row (code-review r13: the
+        # two-select residual restructure had made every probe row pay
+        # nprobe x the table build and broadcast payload)
+        q = qb.select(
+            F.col(id_col).alias("query_id"), _probed_cells(centroids, nprobe), *_adc_tables("v")
+        )
+    else:
         # per-cell tables are genuinely needed: each probed cell's
         # table subtracts THAT cell's centroid from the query
         probed = qb.select(
-            F.col(id_col).alias("query_id"), probe_cells, F.col("v")
+            F.col(id_col).alias("query_id"), _probed_cells(centroids, nprobe), F.col("v")
         )
         rv = _residual_sql(centroids)
         if rv is not None:
@@ -772,47 +748,13 @@ def topk_ivf_pq(
             probed = plan_barrier(
                 probed.select("query_id", "cell", F.expr(rv).alias("_rv"))
             )
-            q = probed.select(
-                "query_id",
-                "cell",
-                *[
-                    _dists(
-                        f"slice(_rv, {s * sub + 1}, {sub})", pq_codebooks[s]
-                    ).alias(f"adc{s}")
-                    for s in range(m)
-                ],
-            )
+            q_v = "_rv"
         else:
             cell_cent = F.element_at(
                 mat_lit(centroids), (F.col("cell") + 1).cast("int")
             )
             q_v = F.zip_with("v", cell_cent, lambda x, y: x - y)
-            q = probed.select(
-                "query_id",
-                "cell",
-                *[
-                    _dists(F.slice(q_v, s * sub + 1, sub), pq_codebooks[s]).alias(
-                        f"adc{s}"
-                    )
-                    for s in range(m)
-                ],
-            )
-    else:
-        # raw vectors: the tables are cell-independent, so compute all
-        # m HOF folds ONCE per query alongside the explode instead of
-        # once per (query, probed cell) row (code-review r13: the
-        # two-select residual restructure had made every probe row pay
-        # nprobe x the table build and broadcast payload)
-        q = qb.select(
-            F.col(id_col).alias("query_id"),
-            probe_cells,
-            *[
-                _dists(f"slice(v, {s * sub + 1}, {sub})", pq_codebooks[s]).alias(
-                    f"adc{s}"
-                )
-                for s in range(m)
-            ],
-        )
+        q = probed.select("query_id", "cell", *_adc_tables(q_v))
     # 9dp-quantized DECIMAL term sum: exact and order-free, so the ADC
     # ranking is replayable by an oracle that groups the terms instead
     # of chaining them (unit-scale distances sit safely inside the
@@ -823,30 +765,12 @@ def topk_ivf_pq(
             F.element_at(F.col(f"adc{s}"), (F.col(f"code{s}") + 1).cast("int")), 9
         ).cast("decimal(18,9)")
         approx = term if approx is None else approx + term
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("_adc", approx)
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("_adc").asc(), F.col("neighbor_id").asc()
-    )
+    scored = _probe_join(c, q, "cell").withColumn("_adc", approx)
     if rerank_m is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w_adc))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                "rank",
-                F.col("_adc").cast("double").alias("approx_sq_dist"),
-            )
+        return _topk(
+            scored, "_adc", k, F.col("_adc").cast("double").alias("approx_sq_dist"), ascending=True
         )
-    cand = (
-        scored.withColumn("_crank", F.row_number().over(w_adc))
-        .filter(F.col("_crank") <= rerank_m)
-        .select("query_id", "neighbor_id")
-    )
+    cand = _topk(scored, "_adc", rerank_m, ascending=True)
     cfull = _with_norm(corpus, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv")
     )
@@ -858,16 +782,7 @@ def topk_ivf_pq(
         .join(F.broadcast(qfull), "query_id")
         .withColumn("_d", _pair_sq_dist("cv", "qv"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_d").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("_d", 6).alias("sq_dist")
-        )
-    )
+    return _topk(rescored, "_d", k, F.round("_d", 6).alias("sq_dist"), ascending=True)
 
 
 def exact_sq_topk(
@@ -898,17 +813,8 @@ def exact_sq_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     ).dropDuplicates(["query_id"])
-    d = c.join(
-        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
-    ).withColumn("_d", _pair_sq_dist("cv", "qv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_d").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        d.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("_d", 6).alias("sq_dist"))
-    )
+    d = _probe_join(c, q).withColumn("_d", _pair_sq_dist("cv", "qv"))
+    return _topk(d, "_d", k, F.round("_d", 6).alias("sq_dist"), ascending=True)
 
 
 def ann_recall_report(
@@ -989,12 +895,8 @@ def probe_cells(
     definition, ADVICE r15 — not a parallel re-derivation), so pruning
     a store to these cells can never change a search result (pinned by
     test)."""
-    cells = len(centroids)
-    qb = _with_norm(queries, id_col, vec_col)
-    qd = sq_dists_expr("v", centroids)
-    return qb.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(ranked_probe_cells(qd, cells, nprobe)).alias("cell"),
+    return _with_norm(queries, id_col, vec_col).select(
+        F.col(id_col).alias("query_id"), _probed_cells(centroids, nprobe)
     )
 
 
@@ -1094,16 +996,9 @@ def cosine_topk_zorder(
         F.col(zid_col).alias("_zid"),
         F.expr(f"shiftright(`{z_col}`, {shift})").alias("_bucket"),
     )
-    c = _with_norm(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cn"),
-    ).join(zb.withColumnRenamed("_zid", "neighbor_id"), "neighbor_id")
-    q = _with_norm(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-    ).join(zb.withColumnRenamed("_zid", "query_id"), "query_id")
+    c, q = _float_sides(corpus, queries, id_col, vec_col)
+    c = c.join(zb.withColumnRenamed("_zid", "neighbor_id"), "neighbor_id")
+    q = q.join(zb.withColumnRenamed("_zid", "query_id"), "query_id")
     probes = q.select(
         "query_id",
         "qv",
@@ -1115,31 +1010,13 @@ def cosine_topk_zorder(
         ).alias("_bucket"),
     )
     scored = (
-        c.join(F.broadcast(probes), "_bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.aggregate(
-                F.zip_with("cv", "qv", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            / (F.col("cn") * F.col("qn")),
-        )
+        _probe_join(c, probes, "_bucket")
+        .withColumn("cosine", _cosine())
         # -0.0 canonicalization (+ 0.0) BEFORE ranking: Spark round() of a
         # tiny negative yields 0.0 where DuckDB ROUND yields -0.0, and the
         # repr-hash distinguishes them (the round-9 embedding_covariance
         # failure class); ranking on the canonicalized quantized value also
         # makes the k-cut order identical cross-engine.
-        .withColumn("cosine_q", F.round("cosine", 4) + F.lit(0.0))
+        .withColumn("cosine_q", _cosine4())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.col("cosine_q").alias("cosine")
-        )
-    )
+    return _topk(scored, "cosine_q", k, F.col("cosine_q").alias("cosine"))

@@ -69,17 +69,30 @@ def _with_norm(df: DataFrame, id_col: str, vec_col: str, extra: list[str] | None
     ).withColumn("norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)))
 
 
+def _nearest(d):
+    """Index of the smallest entry of a per-row distance array as a
+    long, ties to the LOWER index (first ``array_position`` match) —
+    the primary-cell / sub-code assignment every encode shares."""
+    return (F.array_position(d, F.array_min(d)) - 1).cast("long")
+
+
+# SQ8 code format: each component of the unit-normalized vector scaled
+# to [-127, 127] and rounded, so the integer dot product of two codes
+# over _SQ8_SCALE² approximates their cosine.
+_SQ8_SCALE = 127
+
+
+def _sq8_code():
+    """The SQ8 code of the projected ``v``/``norm`` columns:
+    round(x/‖x‖·127) per component, as ``array<long>``."""
+    return F.transform("v", lambda x: F.round(x / F.col("norm") * _SQ8_SCALE).cast("long"))
+
+
 def quantize_int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, q8: array<long of int8 values>) — unit-normalized scalar
     quantization. Kept as a separate op so the quantized column can be
     written once and scanned many times (the point of quantizing)."""
-    normed = _with_norm(df, id_col, vec_col)
-    return normed.select(
-        F.col(id_col),
-        F.transform(
-            "v", lambda x: F.round(x / F.col("norm") * 127).cast("long")
-        ).alias("q8"),
-    )
+    return _with_norm(df, id_col, vec_col).select(F.col(id_col), _sq8_code().alias("q8"))
 
 
 def pq_encode(
@@ -126,7 +139,7 @@ def pq_encode(
     _dists = sq_dists_expr
     cb = _with_norm(corpus, id_col, vec_col)
     cd = _dists("v", centroids)
-    cell_col = (F.array_position(cd, F.array_min(cd)) - 1).cast("long").alias("cell")
+    cell_col = _nearest(cd).alias("cell")
     if residual:
         rv = _residual_sql(centroids)
         if rv is not None:
@@ -141,14 +154,11 @@ def pq_encode(
             based = plan_barrier(
                 based.select(F.col(id_col), "cell", F.expr(rv).alias("_rv"))
             )
-            code_cols = []
-            for s in range(m):
-                sd = _dists(f"slice(_rv, {s * sub + 1}, {sub})", pq_codebooks[s])
-                code_cols.append(
-                    (F.array_position(sd, F.array_min(sd)) - 1)
-                    .cast("long")
-                    .alias(f"code{s}")
-                )
+            code_cols = [
+                _nearest(_dists(f"slice(_rv, {s * sub + 1}, {sub})", pq_codebooks[s]))
+                .alias(f"code{s}")
+                for s in range(m)
+            ]
             return plan_barrier(based.select(F.col(id_col), "cell", *code_cols))
         # non-renderable centroids (non-finite values): Column fallback
         own = F.element_at(
@@ -162,9 +172,7 @@ def pq_encode(
             if residual
             else _dists(f"slice(v, {s * sub + 1}, {sub})", pq_codebooks[s])
         )
-        code_cols.append(
-            (F.array_position(sd, F.array_min(sd)) - 1).cast("long").alias(f"code{s}")
-        )
+        code_cols.append(_nearest(sd).alias(f"code{s}"))
     # plan_barrier: the m+1 argmin folds (coarse cell + m sub-codes)
     # would otherwise re-expand under every downstream join reference.
     return plan_barrier(cb.select(
@@ -226,12 +234,7 @@ def pq_reconstruction_report(
             F.col(vec_col).cast("array<double>").alias("v")
         )
         cd = sq_dists_expr("v", centroids)
-        staged = plan_barrier(b.select(
-            F.col("v"),
-            (F.array_position(cd, F.array_min(cd)) - 1)
-            .cast("long")
-            .alias("cell"),
-        ))
+        staged = plan_barrier(b.select(F.col("v"), _nearest(cd).alias("cell")))
         src = "v"
         if residual:
             rv = _residual_sql(centroids)

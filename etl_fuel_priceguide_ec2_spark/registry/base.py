@@ -50,29 +50,56 @@ def register(name: str, oracle: str | None):
 # the previous round's red rows) to the front so that, across rounds,
 # every query accumulates at least one green driver row. Queries absent
 # from the list keep definition order AFTER the prioritized ones.
-# Round-17 window (FROZEN at round start — standing discipline: anything
-# registered after this list is set must lead round 18, never slot into
-# this window late). Derived from `tools/staleness_ledger.py` run AFTER
-# committing the round-16 driver artifacts (CORRECTNESS_r16/BENCH_r16):
-# order = (never-driver-seen first, then rounds-since-last-green desc,
-# registration order); committed LEDGER.json is the audit trail.
-# Slots 1-3: the three round-16 post-freeze codec additions (never in a
-# driver window; sim-green at sf0.01 with committed SIMLOG.json records
-# AND covered by the full-tree 248/248 sim). Slots 4-48: the stalest
-# r12-last-green cohort, ledger order. Slots 49-50: the r13 cohort
-# head, ledger order. Slots 51-70 pin the round-18 net head
-# (next-stalest r13 cohort, ledger order).
+# Round-18 window: the 14 similarity-ladder queries whose operators
+# were rebuilt on a shared core lead, then every round-17-touched query
+# (ROADMAP "Carried over"), then the rest of the round-17 window in its
+# frozen order (entries already listed above are not repeated). The
+# round-17 window was derived from `tools/staleness_ledger.py` run
+# AFTER committing the round-16 driver artifacts (CORRECTNESS_r16/
+# BENCH_r16): order = (never-driver-seen first, then
+# rounds-since-last-green desc, registration order); committed
+# LEDGER.json is the audit trail.
 _ROUND_PRIORITY: list[str] = [
-    # --- 3 round-16 post-freeze additions (never driver-seen) ---
+    # --- the similarity-ladder queries rebuilt on one probe/score/top-k
+    # core (plans unchanged; re-verify their results) ---
+    "similarity_topk",
+    "similarity_topk_ivf",
+    "similarity_topk_int8",
+    "similarity_topk_rplsh",
+    "similarity_topk_ivf_sq8",
+    "similarity_topk_ivf_sq8_rerank",
+    "similarity_topk_ivf2_sq8",
+    "similarity_topk_zorder",
+    "similarity_topk_ivf_pq",
+    "similarity_topk_ivf_pq_residual",
+    "ann_recall_ivf_pq",
+    "ann_recall_zorder",
+    "hybrid_rrf_topk_docs",
+    "similarity_pandas_udf",
+    # --- round-17-touched queries (VERDICT r17 item 1) ---
+    "pagerank_supplier_customer",
+    "hits_trade_authorities",
+    "dedup_ngram_jaccard_auto_skew",
+    "dedup_ngram_jaccard_prefix",
+    "semantic_dedup_pairs_two_level",
+    "exact_substring_spans",
+    "exact_substring_incremental_spans",
+    "winnow_candidate_pairs",
+    "triangle_counts_part_graph",
+    "image_ahash_near_pairs",
+    "image_phash_near_pairs",
+    "audio_fingerprint_near_pairs",
+    "image_ahash_keeplist",
+    "image_phash_keeplist",
+    "audio_fingerprint_keeplist",
     "image_ahash_keeplist_png",
     "image_ahash_keeplist_jpeg",
     "video_frame_ahash_sample",
+    "embedding_covariance_from_state",
     # --- stalest r12 cohort (ledger order) ---
     "scrub_duplicated_spans",
-    "winnow_candidate_pairs",
     "containment_pairs",
     "symspell_edit1_pairs",
-    "similarity_topk_ivf",
     "text_token_stats",
     "text_quality_score",
     "text_lang_id",
@@ -82,13 +109,10 @@ _ROUND_PRIORITY: list[str] = [
     "multimodal_frame_sample",
     "audio_waveform_stats",
     "audio_zero_crossings",
-    "image_ahash_near_pairs",
-    "image_phash_near_pairs",
     "stream_window_counts",
     "price_change_deltas",
     "sessionize_events",
     "csv_roundtrip_battery",
-    "similarity_topk_int8",
     "key_skew_profile",
     "salted_event_value_agg",
     "incremental_monthly_rollup",
@@ -118,7 +142,6 @@ _ROUND_PRIORITY: list[str] = [
     "asof_point_lookup",
     # --- slots 51+: past the driver window; round-18 net head ---
     "enrichment_join",
-    "image_phash_keeplist",
     "asof_join_tolerance_7d",
     "event_transition_matrix",
     "pivot_event_counts",

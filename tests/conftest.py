@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -77,7 +78,30 @@ _SLOW_TESTS = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
+def _is_full_collection(config) -> bool:
+    """True for a whole-suite run (``pytest tests/`` or ``pytest`` from
+    the repo root); False for a subset (one file, a node id, ``-k``,
+    ``-m``, ``--deselect``, ``--lf``)."""
+    opt = config.option
+    if opt.keyword or opt.markexpr or getattr(opt, "deselect", None):
+        return False
+    if getattr(opt, "lf", False) or getattr(opt, "failedfirst", False):
+        return False
+    here = Path(__file__).resolve().parent
+    paths = [Path(a.split("::")[0]).resolve() for a in config.args if "::" not in a]
+    return len(paths) == len(config.args) > 0 and all(p in (here, here.parent) for p in paths)
+
+
+def pytest_collection_modifyitems(session, config, items):
+    # A renamed or deleted slow test would leave a dead name behind that
+    # silently stops skipping anything; fail the whole-suite collection
+    # instead (a module that failed to collect already fails the run).
+    if session.testsfailed == 0 and _is_full_collection(config):
+        stale = _SLOW_TESTS - {item.name for item in items}
+        if stale:
+            raise pytest.UsageError(
+                f"_SLOW_TESTS names match no collected test: {sorted(stale)}"
+            )
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1":
         return
     skip = pytest.mark.skip(

@@ -2664,6 +2664,45 @@ def test_iteration_pin_sets_checkpoint_dir_once(spark, tmp_path):
     assert not _checkpoint_dir_matches(None, ckdir)
 
 
+def _pin_docs(spark):
+    return spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+
+
+def test_exact_substring_spans_rejects_unpinned_checkpoint_dir(spark, tmp_path):
+    """checkpoint_dir on the uncapped span path has no pin to apply to:
+    it must raise, not be silently ignored (ADVICE r17)."""
+    import pytest
+
+    with pytest.raises(ValueError, match="max_gram_freq=None"):
+        dedup.exact_substring_spans(
+            _pin_docs(spark), "doc_id", "text", max_gram_freq=None,
+            checkpoint_dir=str(tmp_path / "ck"),
+        )
+
+
+def test_exact_substring_incremental_rejects_unpinned_checkpoint_dir(spark, tmp_path):
+    """Same contract as the batch span miner, on the incremental path."""
+    import pytest
+
+    grams = spark.createDataFrame([(1, 1, 7)], "doc_id long, pos int, _h long")
+    with pytest.raises(ValueError, match="max_gram_freq=None"):
+        dedup.exact_substring_spans_incremental(
+            grams, grams, max_gram_freq=None, checkpoint_dir=str(tmp_path / "ck")
+        )
+
+
+def test_ngram_jaccard_rejects_checkpoint_dir_without_prefix_path(spark, tmp_path):
+    """prefix_filter=False never takes the prefix path's pin, so a
+    checkpoint_dir would be silently ignored: it must raise."""
+    import pytest
+
+    with pytest.raises(ValueError, match="prefix_filter=False"):
+        dedup.ngram_jaccard_pairs(
+            _pin_docs(spark), "doc_id", "text", prefix_filter=False,
+            checkpoint_dir=str(tmp_path / "ck"),
+        )
+
+
 def test_durable_store_refingerprints_within_one_process(spark, tmp_path):
     """The durable group store's session cache is keyed by the corpus
     FINGERPRINT (code-review r16): regenerating the fixture dir within

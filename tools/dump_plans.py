@@ -54,7 +54,7 @@ NOTES = {
     "event_transition_matrix": "one user_id window shuffle for LAG, then a tiny global aggregate over |event_types|^2 keys.",
     "curation_keep_list": "quality metrics are per-row codegen; the canonical flag is one window over 32-byte content hashes — document payloads never shuffle twice.",
     "decontaminated_train_ids": "train side scanned once, assigned via the broadcast eval-side codebook; the contaminated flag join moves train ids only.",
-    "similarity_topk_ivf2_sq8": "two-level IVF: corpus assigned to ONE (coarse x residual) composite cell with k1+k2 HOF folds per row (not a flat sqrt(n) codebook); queries probe nprobe^2 composite cells; int8 integer ranking.",
+    "similarity_topk_ivf2_sq8": "two-level IVF: corpus assigned to ONE (coarse x residual) composite cell with k1+k2 HOF folds per row (not a flat sqrt(n) codebook); queries probe a budget of nprobe composite cells ranked by d1 + d2 (the nprobe^2 grid form measured 1.9x slower); int8 integer ranking.",
     "contamination_attribution": "same asymmetric probe as semantic_contamination; the per-benchmark report is a two-row aggregate — pair evidence never leaves the executors unaggregated.",
     "hll_users_by_event_type": "two-level aggregate: partial max(rho) per (type, register) map-side, exchange moves O(groups * 2^b) register rows — never user ids; estimate is one tiny final projection.",
     "hll_distinct_event_ids": "same register shape, global: 256-row shuffle regardless of input size; the exact-integer indicator sum keeps the estimate engine-portable.",
