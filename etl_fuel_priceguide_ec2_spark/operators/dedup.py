@@ -22,6 +22,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from etl_fuel_priceguide_ec2_spark.operators.util import (
     fan_out,
@@ -783,6 +792,61 @@ def embedding_near_dup_pairs(
     )
 
 
+# Driver finish of connected_components: an edge row is two ids, 16 B
+# in Arrow's columnar layout for long ids (the common case; a string id
+# graph is sized by the same row count)
+_CC_EDGE_ROW_BYTES = 16
+# id types whose numpy sort order is Spark's MIN order (strings: Python
+# code-point order == Spark's UTF8_BINARY byte order); anything else
+# keeps the distributed loop
+_CC_DRIVER_ID_TYPES = (
+    ByteType(), ShortType(), IntegerType(), LongType(), StringType()
+)
+
+
+def _cycle_hops(it: int, hops_per_probe: int | str) -> int:
+    # "auto": the first two probe cycles run the hops=1 schedule
+    # (shallow graphs converge inside it and never pay for batching);
+    # still changing after that -> depth-dominated -> batch 2
+    if hops_per_probe == "auto":
+        return 1 if it < 2 else 2
+    return hops_per_probe
+
+
+def _hashmin_on_driver(
+    spark, edges, id_type, max_iter: int, hops_per_probe: int | str
+) -> DataFrame:
+    """The distributed loop's exact schedule replayed in numpy over id
+    ranks (rank order == id order, so MIN over ranks is MIN over ids):
+    the same hops per probe cycle, the same last-hop convergence test,
+    the same ``max_iter`` truncation — labels are bit-identical even
+    for a graph the loop would not finish. ``edges`` is the doubled,
+    distinct, NULL-free edge relation as an Arrow table."""
+    import numpy as np
+    import pyarrow as pa
+
+    arrow_type = edges.schema.field("src").type
+    ids, src = np.unique(edges.column("src").to_numpy(), return_inverse=True)
+    dst = np.searchsorted(ids, edges.column("dst").to_numpy())
+    label = np.arange(len(ids))
+    for it in range(max_iter):
+        for _ in range(_cycle_hops(it, hops_per_probe)):
+            hop = label.copy()
+            np.minimum.at(hop, src, label[dst])
+            changed = bool((hop != label).any())
+            label = hop
+        if not changed:
+            break
+    node_ids = pa.array(ids, type=arrow_type)
+    out = pa.table(
+        {"doc_id": node_ids, "component_id": node_ids.take(pa.array(label))}
+    )
+    schema = StructType(
+        [StructField("doc_id", id_type), StructField("component_id", id_type)]
+    )
+    return spark.createDataFrame(out, schema)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -793,11 +857,37 @@ def connected_components(
 ) -> DataFrame:
     """Cluster near-dup pairs into groups: connected components via
     iterative HashMin label propagation (each node repeatedly adopts the
-    smallest id among itself and its neighbors). The standard
-    large-graph approach on Spark — each round is one join + one
-    aggregate, both key-partitioned; rounds needed = graph diameter
-    (near-dup clusters are shallow, so usually 2-4). Converged when no
-    label changes.
+    smallest id among itself and its neighbors). Rounds needed = graph
+    diameter (near-dup clusters are shallow, so usually 2-4). Converged
+    when no label changes.
+
+    Two paths, one schedule, bit-identical labels:
+
+    - Driver finish (graphs up to the cap). After the edge relation is
+      pinned, at most ``cap + 1`` of its rows come back through Arrow;
+      if the graph fits and has no NULL id (and the id type is integral
+      or a binary-collated string), the HashMin schedule below is
+      replayed in numpy on the driver and the labels return through
+      ``createDataFrame(<Arrow table>)`` with the input id type (a
+      local relation: no job, no Python worker). Each probe cycle of
+      the Spark loop pays the fixed job floor several times (checkpoint
+      job, shuffles, the probe), which dominates every small graph; the
+      driver finish pays only the edge pin and one Arrow collect (3
+      Spark jobs for a 30-edge chain, where the loop runs 133).
+      On the ``curation_keeplist`` benchmark (~30-node graphs, 4
+      cores) the traced seed-5 pass fell from 58-59 to 15 ``dedup`` jobs,
+      and the wall median from 18.75 to 15.46 s (10 interleaved
+      parent/change pairs, seeds 31-40, faster in 9).
+      ``cap = util.broadcast_row_cap(spark, 16)``: the session's
+      ``spark.sql.autoBroadcastJoinThreshold`` at 16 B per edge row
+      (655,360 rows at Spark's 10 MB default, which ``get_session``
+      keeps; 6,553,600 under the ``batch-100tb`` preset's 100 MB;
+      ``-1`` turns the driver finish off). A graph that size is
+      threshold-sized, so it needs no more driver memory than any
+      broadcast join (see ``broadcast_row_cap``).
+    - Distributed loop (larger graphs — the 100 TB path). Each round is
+      one join + one aggregate, both key-partitioned, with the state
+      pinned per probe cycle.
 
     ``hops_per_probe`` batches that many propagation hops into ONE
     materialization + convergence probe: the fixpoint labels are
@@ -830,6 +920,8 @@ def connected_components(
     int to pin a fixed schedule. At 100 TB a
     probe is a driver round-trip + a full label-relation
     materialization, so the same trade holds with bigger constants.
+    The driver finish replays the same schedule, so ``max_iter`` and
+    ``hops_per_probe`` mean the same on both paths.
 
     Loop shuffles stay at the session's ``shuffle.partitions`` with AQE
     coalescing. Hash-repartitioning every loop relation to a target
@@ -848,9 +940,13 @@ def connected_components(
     instead (one FS write+read per probe cycle) so a multi-hour run on
     a preemptible fleet survives losing an executor at iteration 30;
     labels are bit-identical either way (``util.iteration_pin``,
-    VERDICT r15 item 3).
+    VERDICT r15 item 3). The edge relation is pinned the same way on
+    both paths.
     """
-    from etl_fuel_priceguide_ec2_spark.operators.util import iteration_pin
+    from etl_fuel_priceguide_ec2_spark.operators.util import (
+        broadcast_row_cap,
+        iteration_pin,
+    )
 
     pin = iteration_pin(checkpoint_dir)
     edges = pin(
@@ -864,8 +960,8 @@ def connected_components(
     if hops_per_probe != "auto" and hops_per_probe < 1:
         raise ValueError(f"hops_per_probe must be >= 1 or 'auto', got {hops_per_probe}")
 
-    # NOT broadcast-hinted, unlike pagerank/hits (r17 A/B,
-    # tools/ab_round17_cc.py): broadcasting the node-sized label side
+    # NOT broadcast-hinted, unlike pagerank/hits (r17 A/B, commit
+    # 298e2f0): broadcasting the node-sized label side
     # of the hop joins measured FLAT on the deep embedding graph
     # (semantic keep-list 5.19 -> 4.89 min-of-4 at 32 cores, dead even
     # at 8) and ~8% WORSE on the shallow ngram graph at 8 cores
@@ -902,15 +998,17 @@ def connected_components(
             .select("node", F.col("node").alias("component_id"))
             .select(F.col("node").alias("doc_id"), "component_id")
         )
+    id_type = edges.schema["src"].dataType
+    cap = broadcast_row_cap(edges.sparkSession, _CC_EDGE_ROW_BYTES)
+    if cap and id_type in _CC_DRIVER_ID_TYPES:
+        small = edges.limit(cap + 1).toArrow()
+        if small.num_rows <= cap and not any(c.null_count for c in small.columns):
+            return _hashmin_on_driver(
+                edges.sparkSession, small, id_type, max_iter, hops_per_probe
+            )
     labels = None
     for it in range(max_iter):
-        if hops_per_probe == "auto":
-            # first two probe cycles: the hops=1 schedule (shallow
-            # graphs converge inside it and never pay for batching);
-            # still-changing after that -> depth-dominated -> batch 2
-            hops = 1 if it < 2 else 2
-        else:
-            hops = hops_per_probe
+        hops = _cycle_hops(it, hops_per_probe)
         # batch `hops` propagation hops, keeping the LAST hop's change
         # flag (monotone HashMin: one full no-change hop IS the
         # fixpoint, even mid-batch), then checkpoint ONCE (truncates

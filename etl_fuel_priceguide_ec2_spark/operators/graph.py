@@ -24,17 +24,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_fuel_priceguide_ec2_spark.operators.util import round_like_duckdb
+from etl_fuel_priceguide_ec2_spark.operators.util import (
+    broadcast_row_cap,
+    round_like_duckdb,
+)
 
 # Score relations (ranks / hub / auth) are node-sized: one row of
-# (node, double) per node. Below this node count the relation builds a
-# broadcast hash table of a few hundred MB at most (~48 B/entry framed
-# ≈ 200 MB at the cap) — the guide §3.1 envelope — so the per-iteration
-# edge⋈scores join can be a BroadcastHashJoin and the EDGE relation
+# (node, double) per node, ~48 B per entry once framed in a broadcast
+# hash table. Below broadcast_row_cap(spark, _SCORE_ROW_BYTES) nodes
+# (218k at Spark's stock 10 MB threshold, 2.18M under the
+# batch-100tb preset's 100 MB) the per-iteration edge⋈scores join can be a
+# BroadcastHashJoin — the guide §3.1 envelope — and the EDGE relation
 # (the corpus-sized side) is never shuffled by the join at all; only
 # the contribution aggregate exchanges data. Above the cap the keyed
 # SMJ/SHJ path stays (a billion-node graph must shuffle by key).
-_BROADCAST_SCORES_MAX_NODES = 4_000_000
+_SCORE_ROW_BYTES = 48
 
 # In the lazy (localCheckpoint-free) pagerank mode, pin every Nth
 # iteration anyway: plan depth grows linearly with iters and Catalyst
@@ -73,7 +77,8 @@ def pagerank(
     ``broadcast_scores``: hint the node-sized score side of each
     iteration's joins to broadcast (the edge relation never shuffles).
     Default ``None`` auto-enables iff the node count (already computed
-    for the teleport term) is <= ``_BROADCAST_SCORES_MAX_NODES``;
+    for the teleport term) is within ``util.broadcast_row_cap`` (the
+    session's broadcast threshold at ``_SCORE_ROW_BYTES`` per node);
     identical results either way — only the join strategy changes."""
     from etl_fuel_priceguide_ec2_spark.operators.util import iteration_pin
 
@@ -115,7 +120,9 @@ def pagerank(
     # tools/ab_round17_graph.py). Join strategy changes values nowhere:
     # contributions still sum as DECIMAL per node.
     if broadcast_scores is None:
-        broadcast_scores = n <= _BROADCAST_SCORES_MAX_NODES
+        broadcast_scores = n <= broadcast_row_cap(
+            edges.sparkSession, _SCORE_ROW_BYTES
+        )
     bc = F.broadcast if broadcast_scores else (lambda d: d)
     # Per-iteration rank pinning is needed only in reliable-checkpoint
     # mode (bounded recompute on executor loss for preemptible fleets).
@@ -470,7 +477,9 @@ def hits(
     # over the pinned nodes blocks (cheap) and only when the caller
     # didn't decide.
     if broadcast_scores is None:
-        broadcast_scores = nodes.count() <= _BROADCAST_SCORES_MAX_NODES
+        broadcast_scores = nodes.count() <= broadcast_row_cap(
+            edges.sparkSession, _SCORE_ROW_BYTES
+        )
     bc = F.broadcast if broadcast_scores else (lambda d: d)
 
     _dec = "decimal(38,12)"

@@ -81,6 +81,24 @@ def plan_barrier(df: DataFrame) -> DataFrame:
     )
 
 
+def broadcast_row_cap(spark, bytes_per_row: int) -> int:
+    """Rows of ``bytes_per_row`` that fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold``: the ONE size gate for the
+    graph operators' driver-resident relations (pagerank/hits broadcast
+    score tables, connected_components' driver finish). ``0`` when the
+    threshold is ``-1`` (broadcasting turned off), which turns those
+    driver-side paths off too.
+
+    Driver memory: a relation under this cap is threshold-sized, and
+    the driver must already hold one that large to build ANY broadcast
+    join, so ``spark.driver.memory`` sized for the session's broadcasts
+    covers it. Budget a few times the threshold — the CC driver finish
+    keeps its Arrow edge table plus numpy rank/label arrays alive
+    together. Raise the threshold only with driver memory to match."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return max(threshold, 0) // bytes_per_row
+
+
 def iteration_pin(checkpoint_dir: str | None = None):
     """The ONE switch between the two lineage-truncation modes every
     iterative operator (pagerank/hits/connected_components) threads

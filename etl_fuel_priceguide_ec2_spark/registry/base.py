@@ -60,6 +60,29 @@ def register(name: str, oracle: str | None):
 # rounds-since-last-green desc, registration order); committed
 # LEDGER.json is the audit trail.
 _ROUND_PRIORITY: list[str] = [
+    # --- connected_components consumers (small graphs now finish on
+    # the driver; labels must be unchanged), in call-path order:
+    # the direct callers, then band_keeplist's media keep-lists, then
+    # the curation decision layer; dedup_savings_report reaches CC
+    # through minhash_dedup_keeplist ---
+    "dedup_clusters",
+    "semantic_dedup_keeplist",
+    "minhash_dedup_keeplist",
+    "dedup_savings_report",
+    "containment_keeplist",
+    "snm_dedup_keeplist",
+    "image_ahash_keeplist",
+    "image_ahash_keeplist_png",
+    "image_ahash_keeplist_jpeg",
+    "image_phash_keeplist",
+    "audio_fingerprint_keeplist",
+    "corpus_curation_decision",
+    "curation_decision_incremental",
+    "curation_decision_outlier_gated",
+    # --- pagerank/hits: broadcast cap now follows the broadcast
+    # threshold (plans unchanged at fixture scale) ---
+    "pagerank_supplier_customer",
+    "hits_trade_authorities",
     # --- the similarity-ladder queries rebuilt on one probe/score/top-k
     # core (plans unchanged; re-verify their results) ---
     "similarity_topk",
@@ -77,8 +100,6 @@ _ROUND_PRIORITY: list[str] = [
     "hybrid_rrf_topk_docs",
     "similarity_pandas_udf",
     # --- round-17-touched queries (VERDICT r17 item 1) ---
-    "pagerank_supplier_customer",
-    "hits_trade_authorities",
     "dedup_ngram_jaccard_auto_skew",
     "dedup_ngram_jaccard_prefix",
     "semantic_dedup_pairs_two_level",
@@ -89,11 +110,6 @@ _ROUND_PRIORITY: list[str] = [
     "image_ahash_near_pairs",
     "image_phash_near_pairs",
     "audio_fingerprint_near_pairs",
-    "image_ahash_keeplist",
-    "image_phash_keeplist",
-    "audio_fingerprint_keeplist",
-    "image_ahash_keeplist_png",
-    "image_ahash_keeplist_jpeg",
     "video_frame_ahash_sample",
     "embedding_covariance_from_state",
     # --- stalest r12 cohort (ledger order) ---

@@ -225,9 +225,12 @@ def q_multimodal_resize(spark, sf_dir):
 )
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup pairs → connected components → (doc, canonical doc).
-    Iterative HashMin on Spark; the oracle reaches the same fixpoint
-    with a recursive CTE (viable only at oracle scale — the Spark loop
-    is the 100 TB path)."""
+    HashMin label propagation: a graph under the broadcast-threshold
+    cap (this one, at fixture scale) finishes on the driver, a larger
+    one runs the distributed Spark loop (the 100 TB path); both give
+    the same labels (``dedup.connected_components``). The oracle
+    reaches the same fixpoint with a recursive CTE (viable only at
+    oracle scale)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.5, prefix_filter=False

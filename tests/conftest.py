@@ -44,7 +44,6 @@ _SLOW_TESTS = {
     "test_asof_tolerance_matches_bruteforce",
     "test_capstone_signal_store_invalidated_by_clear_store_cache",
     "test_capstone_signals_parquet_roundtrip_decisions_equal",
-    "test_cc_fixpoint_identical_across_hop_schedules",
     "test_durable_store_refingerprints_within_one_process",
     "test_funnel_first_touch_matches_bruteforce",
     "test_gap_fill_daily_matches_bruteforce",
@@ -58,10 +57,6 @@ _SLOW_TESTS = {
     "test_latest_per_key_matches_bruteforce",
     "test_salted_agg_equals_plain_agg",
     "test_ivf2_sq8_recall_vs_exact",
-    "test_query_matches_oracle[audio_fingerprint_keeplist]",
-    "test_query_matches_oracle[corpus_curation_decision]",
-    "test_query_matches_oracle[curation_decision_incremental]",
-    "test_query_matches_oracle[dedup_clusters]",
     "test_query_matches_oracle[semantic_dedup_pairs_two_level]",
     "test_round7_operator_empty_and_degenerate_edges",
     "test_example_ann_serving_pipeline",

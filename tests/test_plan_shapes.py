@@ -1028,3 +1028,28 @@ def test_kfold_manifest_inherits_the_sharder_shape(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange rangepartitioning", plan)) <= 1
     for m in re.finditer(r"Window \[[^\]]*partitionBy=\[([^\]]*)\]", plan):
         assert "shard" not in m.group(1) and "fold" not in m.group(1)
+
+
+def test_graph_driver_caps_follow_broadcast_threshold(spark):
+    """One size gate for the graph operators' driver-resident relations
+    (pagerank/hits score broadcasts, the CC driver finish):
+    util.broadcast_row_cap is autoBroadcastJoinThreshold over a per-row
+    byte estimate, and -1 (broadcasting off) turns the gate off — so
+    pagerank's node-sized score side is no longer broadcast-hinted."""
+    from etl_fuel_priceguide_ec2_spark.operators import graph
+    from etl_fuel_priceguide_ec2_spark.operators.util import broadcast_row_cap
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "10MB")
+        assert broadcast_row_cap(spark, 16) == 655_360
+        assert "BroadcastHashJoin" in _plan(graph.pagerank(edges, iters=1))
+        spark.conf.set(key, "-1")
+        assert broadcast_row_cap(spark, 16) == 0
+        assert "BroadcastHashJoin" not in _plan(graph.pagerank(edges, iters=1))
+    finally:
+        spark.conf.set(key, prev)

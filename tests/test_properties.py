@@ -5,9 +5,11 @@ the corners fixture data misses."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from datetime import datetime, timedelta
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from etl_fuel_priceguide_ec2_spark.operators import asof, dedup
@@ -437,30 +439,118 @@ def test_dd_quantile_relative_error_on_arbitrary_inputs(spark, vals):
         assert abs(est - true) / true < 1 / 16 + 1e-9, (q, est, true)
 
 
-def test_cc_fixpoint_identical_across_hop_schedules(spark):
+_BCAST_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+# the two connected_components paths: Spark's default threshold leaves
+# small graphs to the driver finish, -1 turns it off (the Spark loop)
+CC_PATHS = {"driver_finish": "10MB", "spark_loop": "-1"}
+
+
+@contextmanager
+def _cc_path(spark, path: str):
+    prev = spark.conf.get(_BCAST_THRESHOLD)
+    spark.conf.set(_BCAST_THRESHOLD, CC_PATHS[path])
+    try:
+        yield
+    finally:
+        spark.conf.set(_BCAST_THRESHOLD, prev)
+
+
+@pytest.mark.parametrize("path", sorted(CC_PATHS))
+def test_cc_fixpoint_identical_across_hop_schedules(spark, path):
     """hops_per_probe is a SCHEDULE, never a semantics knob: the
     HashMin fixpoint must be identical under hops=1, hops=2, and the
     adaptive default on both cohort shapes — a deep chain (diameter 8,
     where batching wins) and shallow stars (diameter 1, where the
-    round-5 fixed hops=2 paid its tax)."""
+    round-5 fixed hops=2 paid its tax) — on both CC paths."""
     deep = [(i, i + 1) for i in range(8)]                      # 0-1-2-...-8
     shallow = [(10 * c, 10 * c + j) for c in range(3) for j in (1, 2, 3)]
     for edges in (deep, shallow, deep + shallow):
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        results = [
-            sorted(
-                (r.doc_id, r.component_id)
-                for r in dedup.connected_components(
-                    df, hops_per_probe=h
-                ).collect()
-            )
-            for h in (1, 2, "auto")
-        ]
+        with _cc_path(spark, path):
+            results = [
+                sorted(
+                    (r.doc_id, r.component_id)
+                    for r in dedup.connected_components(
+                        df, hops_per_probe=h
+                    ).collect()
+                )
+                for h in (1, 2, "auto")
+            ]
         assert results[0] == results[1] == results[2]
         # every chain node labels to the chain min; every star to hub
         labels = dict(results[0])
         if edges is deep:
             assert all(labels[i] == 0 for i in range(9))
+
+
+def _cc_graph(shapes, perm):
+    """Disjoint stars (hub + spokes) and chains over node ids relabelled
+    by ``perm``, so the component minimum sits anywhere in the shape."""
+    edges, base = [], 0
+    for kind, size in shapes:
+        if kind == "star":
+            edges += [(base, base + j) for j in range(1, size + 1)]
+        else:
+            edges += [(base + j, base + j + 1) for j in range(size)]
+        base += size + 1
+    return [(perm[a], perm[b]) for a, b in edges]
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    shapes=st.lists(
+        st.tuples(st.sampled_from(["star", "chain"]), st.integers(1, 9)), max_size=4
+    ),
+    perm=st.permutations(range(40)),
+    max_iter=st.sampled_from([1, 2, 20]),
+    hops=st.sampled_from([1, 2, "auto"]),
+    id_type=st.sampled_from(["long", "string"]),
+    null_id=st.booleans(),
+)
+@example(shapes=[], perm=list(range(40)), max_iter=20, hops="auto",
+         id_type="long", null_id=False)
+@example(shapes=[("chain", 9), ("star", 5)], perm=list(range(40)), max_iter=2,
+         hops=2, id_type="string", null_id=False)
+@example(shapes=[("chain", 4)], perm=list(range(40)), max_iter=20, hops=1,
+         id_type="long", null_id=True)
+def test_cc_driver_finish_equals_spark_loop(
+    spark, shapes, perm, max_iter, hops, id_type, null_id
+):
+    """The driver finish replays the Spark loop's schedule, so both
+    paths give identical sorted (doc_id, component_id) on any graph —
+    including a ``max_iter`` truncation that stops short of the
+    fixpoint, string ids (Spark's UTF-8 byte order == Python's
+    code-point order) and empty pairs. A NULL id always takes the Spark loop."""
+    edges = _cc_graph(shapes, perm)
+    if null_id:
+        edges.append((edges[0][0] if edges else 0, None))
+    if id_type == "string":
+        # 1- to 4-byte UTF-8 prefixes: U+1D52B sorts after U+FF4E by code
+        # point and UTF-8 bytes (Spark, Python) but before it in UTF-16
+        edges = [
+            tuple(None if v is None else "nñｎ𝔫"[v % 4] + str(v) for v in e)
+            for e in edges
+        ]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    taken = []
+    real = dedup._hashmin_on_driver
+    dedup._hashmin_on_driver = lambda *a: taken.append(1) or real(*a)
+    try:
+        got = {}
+        for path in CC_PATHS:
+            with _cc_path(spark, path):
+                got[path] = sorted(
+                    map(tuple, dedup.connected_components(
+                        pairs, max_iter=max_iter, hops_per_probe=hops
+                    ).collect()),
+                    key=repr,
+                )
+    finally:
+        dedup._hashmin_on_driver = real
+    assert got["driver_finish"] == got["spark_loop"]
+    assert taken == ([] if null_id else [1])
+    nodes = {v for e in edges for v in e}
+    assert {r[0] for r in got["spark_loop"]} == nodes
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
@@ -2571,7 +2661,8 @@ def test_reliable_checkpoint_mode_bit_identical(spark, tmp_path):
     executor loss) to a reliable .checkpoint() that survives executor
     loss on a preemptible fleet (VERDICT r15 item 3). It is a
     DURABILITY knob, never a semantics knob: pagerank, hits, and
-    connected_components must return bit-identical rows either way,
+    connected_components (on both of its paths) must return
+    bit-identical rows either way,
     and the reliable run must actually write RDD checkpoint state
     under the given directory."""
     import os
@@ -2597,11 +2688,13 @@ def test_reliable_checkpoint_mode_bit_identical(spark, tmp_path):
 
     chain = [(i, i + 1) for i in range(8)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    local_cc = sorted(map(tuple, dedup.connected_components(pairs).collect()))
-    relia_cc = sorted(map(tuple, dedup.connected_components(
-        pairs, checkpoint_dir=ckdir
-    ).collect()))
-    assert local_cc == relia_cc and local_cc
+    for path in sorted(CC_PATHS):
+        with _cc_path(spark, path):
+            local_cc = sorted(map(tuple, dedup.connected_components(pairs).collect()))
+            relia_cc = sorted(map(tuple, dedup.connected_components(
+                pairs, checkpoint_dir=ckdir
+            ).collect()))
+        assert local_cc == relia_cc and local_cc
 
     # r17: the span-miner and triangle pins route through the same
     # helper (VERDICT r16 item 4) — same durability-only contract

@@ -35,7 +35,7 @@ NOTES = {
     "q10_returned_top_customers": "TPC-H Q10 shape: returnflag filter pushed into the fact scan; customer/nation broadcast; decimal-exact revenue ranks under TakeOrderedAndProject.",
     "q19_disjunctive_revenue": "TPC-H Q19 shape: Catalyst factors the per-table conjuncts out of the OR and pushes them below the broadcast join; the cross-table residual evaluates post-join.",
     "dedup_ngram_jaccard_auto_skew": "skew-adaptive SSJoin: precomputed corpus stats pick the PPJoin prefix path (no per-call probe); every shuffle key is an 8-byte xxhash64, and the hashed shingle-set relation is pinned once (r17) so the df aggregate, both prefix sides and both verify sides read it instead of re-running the corpus scan+shingle chain (6 scans -> 0).",
-    "dedup_clusters": "pair mining once (localCheckpoint), then HashMin rounds = join+agg on the edge relation at session partitions (AQE coalesces; explicit sizing measured 1.43x slower).",
+    "dedup_clusters": "pair mining once (localCheckpoint); a graph under the broadcast-threshold cap replays HashMin on the driver and returns its labels as a local Arrow relation, a larger one runs HashMin rounds = join+agg on the edge relation at session partitions (AQE coalesces; explicit sizing measured 1.43x slower).",
     "semantic_kmeans_clusters": "assignment is map-only — centroids ride as ONE nested literal (no Exchange in the returned plan); the fit's k*dim update aggregate ran at build time.",
     "semantic_dedup_pairs": "multi-probe blocks compile to an equi self-join on the block id (never cartesian); full-precision verify joins only candidate ids back to vectors.",
     "weighted_sample_chars": "E-S key is one map expression; the global top-100 plans as TakeOrderedAndProject — per-partition partial top-n, no full sort.",
@@ -76,7 +76,7 @@ NOTES = {
     "hybrid_rrf_topk_docs": "both rankers produce per-query top-20 relations; the RRF fuse is a full outer join + window over <= 40 rows per query — corpus-scale work stays inside the audited BM25 and cosine plans.",
     "zorder_layout_lineitem": "the Morton value is one flat shift/mask codegen expression from inlined min/max literals; the bucket stats are a 16-group aggregate — the write-side clustering cost is exactly one range-sort shuffle.",
     "minhash_incremental_pairs": "the new slice's band buckets drive the candidate join against the full bucket store — history x history pairs structurally never form; verify joins touch candidate ids only.",
-    "pagerank_supplier_customer": "loop-invariant edge/degree/node relations checkpointed once; each iteration joins edges against a BROADCAST of the node-sized rank relation (r17; keyed join above the 4M-node cap) + one map-combined aggregate + the broadcast node left-join, with 12-dp decimal contribution sums keeping state engine-portable.",
+    "pagerank_supplier_customer": "loop-invariant edge/degree/node relations checkpointed once; each iteration joins edges against a BROADCAST of the node-sized rank relation (r17; keyed join above the broadcast-threshold node cap) + one map-combined aggregate + the broadcast node left-join, with 12-dp decimal contribution sums keeping state engine-portable.",
     "hits_trade_authorities": "per phase: ONE edge join against the broadcast node-sized score relation (r17; keyed above the node cap) (previous phase's normalization folded into its projection) + one map-combined aggregate + one checkpoint; the 1-row L1 total crosses back broadcast; the (nodes x raw) completion left-join runs once at the end, and the global authority ranking is TakeOrdered(20) then an O(k) window — never an unpartitioned full-graph sort.",
     "quality_classifier_scores": "broadcast-model inference: explode_outer keeps featureless docs decided with NO doc_id spine join; the only join is the BroadcastHashJoin against the compiled weight table; one map-combined per-doc aggregate.",
     "domain_classifier_labels": "one corpus featurization for all classes; the |classes|-row grid is the sanctioned BroadcastNestedLoopJoin; per-(doc, class) decimal sums shuffle once; argmax is a per-doc window over |classes| rows.",
