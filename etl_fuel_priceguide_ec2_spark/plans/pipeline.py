@@ -1,12 +1,15 @@
-"""EP1 — the reference's end-to-end ETL pipeline, as ONE lazy DataFrame
-lineage.
+"""EP1 — the reference's end-to-end ETL pipeline, as lazy DataFrame
+lineages.
 
 Reference trace (``index.js:29-60``): config → list fetch → projection →
 per-id detail fetch (enrichment join) → null filter → wide projection →
 [dim conditional-insert, fact append]. The reference executes this as
-sequential awaited network calls on one thread; here it is a single
-Catalyst plan — the two sinks are the only actions, everything upstream
-is planned/optimized together and executed partition-parallel.
+sequential awaited network calls on one thread; here each sink is one
+Catalyst plan, optimized as a whole and executed partition-parallel.
+The two sinks are two actions, and each runs its whole upstream again:
+harmless over the parquet scans of this casting, but a REST source must
+be fetched once and shared — ``sources.rest.enrich_from_detail_endpoint``
+pins its responses when called, so both sinks read the same ones.
 
 Fixture casting: ``customer`` plays the station list+detail source
 (c_custkey=Id, c_name=Nome, c_mktsegment=Marca), ``nation``/``region``

@@ -115,6 +115,20 @@ def _fs_path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def _has_part_files(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` exists and directly holds a ``part-`` data file
+    — a table Spark has committed at least one write into. Leftovers of
+    an uncommitted write sit under ``_temporary`` and do not count."""
+    if not _fs_path_exists(spark, path):
+        return False
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return any(
+        st.isFile() and st.getPath().getName().startswith("part-")
+        for st in fs.listStatus(hpath)
+    )
+
+
 def _is_existing_non_delta_table(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` exists and is NOT a Delta table — the case
     where auto mode must keep writing parquet (and explicit Delta must
@@ -137,7 +151,9 @@ def upsert_dim(
     Two storage paths behind one contract (VERDICT r15 item 6):
 
     * ``use_delta=None`` (auto) / ``False`` — portable plain-parquet:
-      first run bootstraps the table; later runs append only rows whose
+      the first run (no ``part-`` file under ``path`` yet) bootstraps
+      the table, and an unreadable existing table raises rather than
+      being overwritten; later runs append only rows whose
       key is absent (anti-join against current keys — only the key
       column of the existing dim is ever shuffled/broadcast, not its
       payload). NON-ATOMIC across writers: two concurrent runs can both
@@ -211,11 +227,13 @@ def upsert_dim(
             "references — run in a Delta-capable session (or pass "
             "use_delta=True) instead"
         )
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
+    if not _has_part_files(spark, path):
         src.write.mode("overwrite").parquet(path)
         return
+    # any read error from here on propagates: bootstrapping over an
+    # unreadable table (corrupt footer, transient FS error) would replace
+    # the whole history with one batch, inverting insert-if-absent
+    existing = spark.read.parquet(path)
     inserts = joins.new_keys(src, existing, src_key=key, dim_key=key)
     inserts.write.mode("append").parquet(path)
 

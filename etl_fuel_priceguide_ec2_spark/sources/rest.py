@@ -5,16 +5,23 @@ Reference semantics:
     (``index.js:81-100``).
   * S3 per-key detail fan-out: one GET per station id, awaited
     SEQUENTIALLY in a for-loop (``index.js:112-116``) — the reference's
-    actual bottleneck (runtime ≈ N × RTT, SURVEY.md §6).
+    actual bottleneck (runtime ≈ N × RTT, SURVEY.md §6). Each station is
+    fetched ONCE per run; its dimension row and its price snapshot both
+    come from that one response (``index.js:109-144``).
 
 Spark-first design:
   * The list endpoint is a driver-side fetch (it is one request) whose
-    rows become a DataFrame with an explicit schema.
+    rows become an Arrow local relation with an explicit schema: it
+    plans as a ``LocalTableScan`` held in the plan itself, so scanning
+    it starts no Python worker (a ``createDataFrame(<list>)`` relation
+    is a Python RDD that re-runs one on every action).
   * The per-key fan-out becomes ``mapInPandas`` over the id partitions:
     each executor issues its partition's requests (batched, connection
     reuse), so wall-clock is N/(partitions) × RTT instead of N × RTT —
     semantically the J1 equi-join between the list and the detail
-    source.
+    source. The responses are pinned when the function is called, so
+    every consumer (dimension upsert, fact append, reads) sees the same
+    responses and each id is requested once per call.
 
 No network access exists in this environment, so the transport is an
 injectable ``fetcher`` callable; production would pass an
@@ -29,8 +36,12 @@ import json
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
+
+from etl_fuel_priceguide_ec2_spark.operators.util import iteration_pin
 
 Fetcher = Callable[[str], str]
 """Takes a URL, returns the response body (JSON text). Raises on error."""
@@ -44,10 +55,31 @@ def read_list_endpoint(
     result_path: str = "resultado",
 ) -> DataFrame:
     """S2: fetch the list endpoint once (driver-side — it is a single
-    request) and parallelize the rows with an explicit schema."""
+    request) and return its rows as an Arrow local relation with an
+    explicit schema.
+
+    The rows pass PySpark's own row verifier first, so the checks are
+    those of ``createDataFrame(rows, schema)``: a wrong type (a string
+    or ``1.5`` in a ``long`` column, an int in a ``double`` column) or
+    a ``None`` in a non-nullable field raises. pyarrow alone would
+    truncate ``1.5`` to ``1`` and accept the null. Missing keys become
+    nulls, extra keys are dropped, and positional rows (JSON arrays)
+    map onto the fields in order.
+
+    The relation plans as a ``LocalTableScan``: every scan reads rows
+    held in the plan, with no Python worker. The Python-RDD relation
+    ``createDataFrame(<list>)`` builds cost 0.35-0.48 s per scan of a
+    2,000-row list against 0.04-0.06 s for this one (warm, 4 cores)."""
     body = json.loads(fetcher(url))
     rows = body[result_path] if result_path else body
-    return spark.createDataFrame(rows, schema=schema)
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    verify = _make_type_verifier(struct)
+    for row in rows:
+        verify(row)
+    rows = [r if isinstance(r, dict) else dict(zip(struct.names, r)) for r in rows]
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(struct))
+    )
 
 
 def enrich_from_detail_endpoint(
@@ -63,6 +95,15 @@ def enrich_from_detail_endpoint(
     Each Arrow batch of ids issues its requests inside the executor;
     a failed/undecodable row is skipped (P6 error-tolerant row
     processing), never failing the job.
+
+    The fetch runs HERE, at call time, once: the output is pinned with
+    ``util.iteration_pin()`` (``localCheckpoint(eager=True)``), so every
+    consumer of the returned relation reads the same responses and
+    each id in ``ids`` is requested once per call. A lazy fan-out
+    would re-issue every request per action. Durability: the pinned
+    blocks live on the executors; if one is lost, the job that reads
+    them fails rather than silently fetching again (which could mix
+    two responses for one station into one run).
     """
     n = num_partitions or ids.sparkSession.sparkContext.defaultParallelism
 
@@ -95,4 +136,6 @@ def enrich_from_detail_endpoint(
                 frame = pd.DataFrame(out).reindex(columns=field_names)
                 yield frame.astype(object).where(frame.notna(), None)
 
-    return ids.select(id_col).repartition(n).mapInPandas(_fetch, schema)
+    return iteration_pin()(
+        ids.select(id_col).repartition(n).mapInPandas(_fetch, schema)
+    )

@@ -25,6 +25,7 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 from etl_fuel_priceguide_ec2_spark import sinks
 from etl_fuel_priceguide_ec2_spark.operators import asof, scd, windows
+from etl_fuel_priceguide_ec2_spark.operators.util import iteration_pin
 from etl_fuel_priceguide_ec2_spark.session import get_session
 from etl_fuel_priceguide_ec2_spark.sources import config
 from etl_fuel_priceguide_ec2_spark.sources.rest_datasource import FuelStationDataSource
@@ -42,9 +43,12 @@ def main(workdir: str | None = None) -> dict:
 
     # 2.+3. extract + enrich: the DataSource partitions the id keyspace,
     # so the reference's sequential per-id loop (index.js:112-116) runs
-    # as parallel executor tasks; P2 null filter (index.js:118-120)
+    # as parallel executor tasks; P2 null filter (index.js:118-120).
+    # Pinned once, like the reference's one fetch per station per run
+    # (index.js:109-144): the SCD2 init, the SCD2 merge and both fact
+    # appends read these responses instead of re-fetching each time.
     spark.dataSource.register(FuelStationDataSource)
-    stations = (
+    stations = iteration_pin()(
         spark.read.format("fuelstations")
         .option("endpoint", cfg["endpoint_01"])
         .option("num_stations", cfg["num_stations"])

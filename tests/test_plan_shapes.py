@@ -8,11 +8,14 @@ the scan, fails here long before anyone notices it on a cluster.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_fuel_priceguide_ec2_spark import registry
-from etl_fuel_priceguide_ec2_spark.operators import asof
+from etl_fuel_priceguide_ec2_spark.operators import asof, projections
+from etl_fuel_priceguide_ec2_spark.sources import rest
 from etl_fuel_priceguide_ec2_spark.sources.catalog import load_table
 
 
@@ -30,6 +33,25 @@ def test_point_lookup_predicates_pushed_to_scan(spark, sf_dir):
     assert "IsNotNull(user_id)" in plan or "EqualTo(user_id,7)" in plan
     # top-1 executes as TakeOrderedAndProject, not a global sort
     assert "TakeOrderedAndProject" in plan
+
+
+def test_rest_list_is_local_relation_and_detail_is_pinned(spark):
+    """S2's rows live in the plan (no Python worker re-reads them per
+    scan, and the null filter folds into the scan); S3's responses are
+    pinned at call time, so no consumer's plan re-runs the fan-out."""
+
+    def fetcher(url: str) -> str:
+        if url.endswith("/list"):
+            return json.dumps({"resultado": [{"Id": i, "Nome": f"s{i}"} for i in range(8)]})
+        return json.dumps({"Codigo": int(url.rsplit("/", 1)[1])})
+
+    listed = rest.read_list_endpoint(spark, "u/list", fetcher, "Id bigint, Nome string")
+    for df in (listed, projections.reject_nulls(listed, ["Nome"])):
+        plan = _plan(df)
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+    detail = rest.enrich_from_detail_endpoint(listed, "Id", "u/", fetcher, "Codigo bigint")
+    assert "MapInPandas" not in _plan(detail)
 
 
 def test_enrichment_join_broadcasts_dims(spark, sf_dir):

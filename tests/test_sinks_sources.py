@@ -73,6 +73,32 @@ def test_upsert_dim_insert_if_absent(spark, sf_dir, tmp_path):
     assert survivors.count() == 0  # conditional-put semantics held
 
 
+def test_upsert_dim_unreadable_dim_raises_and_is_kept(spark, tmp_path):
+    """A dimension that exists but cannot be read (corrupt footer,
+    transient FS error) must fail the run, never be bootstrapped over:
+    overwriting would replace the whole history with one batch. A path
+    holding no part- file yet (empty dir, uncommitted-write leftovers)
+    still bootstraps."""
+    from py4j.protocol import Py4JJavaError
+
+    src = spark.range(5).select(F.col("id").alias("Id"), F.lit("n").alias("Nome"))
+
+    broken = tmp_path / "broken"
+    broken.mkdir()
+    part = broken / "part-00000.parquet"
+    part.write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="(?i)footer"):
+        sinks.upsert_dim(src, str(broken), key="Id", use_delta=False)
+    assert part.read_bytes() == b"not a parquet file"
+    assert [p.name for p in broken.iterdir()] == ["part-00000.parquet"]
+
+    fresh = tmp_path / "fresh"
+    (fresh / "_temporary" / "0").mkdir(parents=True)
+    (fresh / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"partial")
+    sinks.upsert_dim(src, str(fresh), key="Id", use_delta=False)
+    assert spark.read.parquet(str(fresh)).count() == 5
+
+
 def test_rest_list_and_detail_fanout(spark):
     stations = {i: {"Id": i, "Nome": f"station {i}"} for i in range(40)}
 
@@ -100,6 +126,132 @@ def test_rest_list_and_detail_fanout(spark):
     rows = detail.collect()
     assert len(rows) == 36  # 4 ids fail (7,17,27,37) and are skipped, not fatal
     assert {r.Codigo % 10 for r in rows}.isdisjoint({7})
+
+
+def test_rest_detail_fetched_once_per_listed_id(spark, tmp_path):
+    """The reference fetches each station once per run and writes the
+    dimension row and the price snapshot from that one response
+    (index.js:109-144): however many consumers read the enrichment,
+    every listed id is requested exactly once — failed ids included."""
+    from collections import Counter
+
+    from pyspark.accumulators import AccumulatorParam
+
+    from etl_fuel_priceguide_ec2_spark.operators import joins
+
+    class _Tally(AccumulatorParam):
+        def zero(self, value):
+            return Counter()
+
+        def addInPlace(self, a, b):
+            a.update(b)
+            return a
+
+    requests = spark.sparkContext.accumulator(Counter(), _Tally())
+    ids = list(range(60))
+
+    def fetcher(url: str) -> str:
+        if url.endswith("/list"):
+            return json.dumps({"resultado": [{"Id": i, "Nome": f"s{i}"} for i in ids]})
+        key = int(url.rsplit("/", 1)[1])
+        requests.add(Counter([key]))
+        if key % 10 == 3:
+            raise OSError("simulated fetch failure")
+        return json.dumps({"Codigo": key, "Preco": key / 10})
+
+    listed = rest.read_list_endpoint(
+        spark, "https://api.example.test/list", fetcher, "Id bigint, Nome string"
+    )
+    detail = rest.enrich_from_detail_endpoint(
+        listed, "Id", "https://api.example.test/station/", fetcher,
+        "Codigo bigint, Preco double",
+    )
+    stations = joins.enrich(listed, detail, on=[("Id", "Codigo")])
+    stations.write.parquet(str(tmp_path / "dim"))
+    rows = stations.collect()
+
+    assert len(rows) == 54  # 6 failed ids skipped (P6)
+    assert spark.read.parquet(str(tmp_path / "dim")).count() == 54
+    assert requests.value == Counter(ids)
+
+
+def _list_fetcher(rows):
+    body = json.dumps({"resultado": rows})
+    return lambda url: body
+
+
+_LIST_DDL = "Id bigint, Nome string, Preco double"
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [{"Id": 1, "Nome": "a", "Preco": 1.5}, {"Id": 2, "Preco": 2.5}],  # missing key
+        [{"Id": 1, "Nome": "a", "Preco": 1.5, "extra": [1, 2]}],  # extra key
+        [{"Id": None, "Nome": None, "Preco": None}, {"Id": 3}],  # nulls
+        [],
+        [[1, "a", 1.5], [2, None, None]],  # positional rows (JSON arrays)
+    ],
+    ids=["missing_keys", "extra_keys", "nulls", "empty", "positional"],
+)
+@pytest.mark.parametrize("ddl", [True, False], ids=["ddl", "struct"])
+def test_read_list_endpoint_matches_python_list_relation(spark, rows, ddl):
+    """S2 builds an Arrow local relation; it returns the same schema
+    (nullability included) and rows as ``createDataFrame(rows, schema)``."""
+    from pyspark.sql.types import StructType
+
+    schema = _LIST_DDL if ddl else StructType.fromDDL(_LIST_DDL)
+    got = rest.read_list_endpoint(spark, "u", _list_fetcher(rows), schema)
+    want = spark.createDataFrame(json.loads(json.dumps(rows)), schema=schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+@pytest.mark.parametrize(
+    "rows,ddl",
+    [
+        ([{"Id": "1"}], "Id bigint"),
+        ([{"Id": 1.5}], "Id bigint"),
+        ([{"Id": True}], "Id bigint"),
+        ([{"Id": 1, "Preco": 2}], "Id bigint, Preco double"),  # JSON int
+        ([{"Id": None}], "Id bigint not null"),
+        ([{"Nome": "a"}], "Id bigint not null, Nome string"),
+        ([{"S": {"a": None}}], "S struct<a: bigint not null>"),
+    ],
+    ids=[
+        "string_in_long", "fraction_in_long", "bool_in_long",
+        "int_in_double", "none_not_nullable", "missing_not_nullable",
+        "nested_not_nullable",
+    ],
+)
+def test_read_list_endpoint_rejects_what_python_list_relation_rejects(spark, rows, ddl):
+    """PySpark's row verifier runs before the Arrow build: pyarrow alone
+    would truncate 1.5 to 1 and accept a null in a non-nullable field.
+    A JSON int in a double column is rejected by both paths."""
+    with pytest.raises((TypeError, ValueError)):
+        spark.createDataFrame(rows, schema=ddl)
+    with pytest.raises((TypeError, ValueError)):
+        rest.read_list_endpoint(spark, "u", _list_fetcher(rows), ddl)
+
+
+def test_read_list_endpoint_known_divergences(spark):
+    """Inputs the Python-list relation accepts and the Arrow build
+    rejects with an error, never a wrong row: a lone UTF-16 surrogate (json.loads
+    yields one from a "\\ud800" escape; the Python path writes U+FFFD)
+    and a JSON array standing for a nested struct (the Python path maps
+    it by position)."""
+    import pyarrow as pa
+
+    lone = json.loads('[{"Id": 1, "Nome": "\\ud800x"}]')
+    assert spark.createDataFrame(lone, "Id bigint, Nome string").count() == 1
+    with pytest.raises(UnicodeEncodeError):
+        rest.read_list_endpoint(spark, "u", _list_fetcher(lone), "Id bigint, Nome string")
+
+    nested = [{"S": [1, "x"]}]
+    ddl = "S struct<a: bigint, b: string>"
+    assert spark.createDataFrame(nested, ddl).first().S.a == 1
+    with pytest.raises(pa.ArrowException):
+        rest.read_list_endpoint(spark, "u", _list_fetcher(nested), ddl)
 
 
 def test_ep1_pipeline_composes(spark, sf_dir, tmp_path):
